@@ -43,9 +43,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Release every relation this sfDir pinned (VERDICT r4 #7) — a no-op
-    // for the exiting JVM, but it keeps Verify honest as the reference
-    // consumer of the evictSfDir lifecycle CacheHygieneSpec asserts.
+    // Release every relation this sfDir pinned — a no-op for the exiting
+    // JVM, but it keeps Verify the reference consumer of the evictSfDir
+    // lifecycle that EdgeCasesSpec's evictSfDir test asserts.
     graft.sources.RelationCache.evictSfDir(spark, sfDir)
     spark.stop()
   }

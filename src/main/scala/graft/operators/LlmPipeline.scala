@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Spec
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** Training-data-pipeline operators beyond the dedup/similarity family —
   * the steps that turn a raw document corpus into a training set:
@@ -151,24 +151,17 @@ object LlmPipeline {
   /** Per-(session, corpus) memo of the trained merge list: llm_bpe_train
     * emits it as the merge table and llm_bpe_apply replays it over the
     * corpus, so the k-iteration training loop runs once, not once per
-    * consumer (the pairsCache/RelationCache lifecycle discipline;
-    * entries are k tuples - driver-tiny). */
-  private val mergesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, Long)]]
+    * consumer (entries are k tuples - driver-tiny). */
+  private val merges =
+    new SessionMemo[String, Seq[(Long, String, Long)]]("bpe-merges")
 
   /** The k-round BPE training loop shared by llm_bpe_train and
     * llm_bpe_apply: (iteration, pair with the U+001F separator kept,
     * weighted count) in merge order - fewer than k rows if a degenerate
     * corpus exhausts early. ONE row per iteration crosses the driver. */
   private def trainMergesRaw(s: SparkSession, d: String)
-      : Seq[(Long, String, Long)] = {
-    graft.sources.SessionHooks.onApplicationEnd(s, "llmpipeline-merges") {
-      () => mergesCache.keys.filter(_._1 eq s).foreach(mergesCache.remove)
-    }
-    val key = (s,
-      java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString)
-    mergesCache.getOrElseUpdate(key, computeMerges(s, d))
-  }
+      : Seq[(Long, String, Long)] =
+    merges(s, SessionMemo.dir(d))(computeMerges(s, d))
 
   /** Force the shared merge-table memo from Bench so the k-iteration
     * training bill is pre-paid deterministically (ADVICE r8: otherwise it

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Spec
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.10 — text side of the LLM-data-pipeline mandate:
   * exact + n-gram dedup, text stats, language ID, quality scoring, token
@@ -388,27 +388,15 @@ object LlmText {
     * and of every test (synthetic corpora use fresh temp dirs); rewriting
     * a path in place and re-querying it would require dropping the entry
     * first. Entries are few (one per corpus × cap) and tiny (the pair
-    * list, not the index), so no eviction is needed. */
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
+    * list, not the index); they evict with the session. */
+  private val pairsMemo =
+    new SessionMemo[(String, Int), DataFrame]("ngram-pairs")
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.LlmText")
 
-  /** Entries for a stopped session are evicted so a session-cycling
-    * harness cannot accumulate strong references to dead sessions or
-    * their persisted pair DataFrames (ADVICE r2). */
-  private def evictOnStop(s: SparkSession): Unit =
-    graft.sources.SessionHooks.onApplicationEnd(s, "llmtext-pairs") { () =>
-      pairsCache.keys.filter(_._1 eq s).foreach(pairsCache.remove)
-    }
-
   private[graft] def ngramPairs(s: SparkSession, d: String,
-      maxDf: Int = 1024): DataFrame = {
-    evictOnStop(s)
-    val key = (s,
-      java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString, maxDf)
-    pairsCache.getOrElseUpdate(key, computeNgramPairs(s, d, maxDf))
-  }
+      maxDf: Int = 1024): DataFrame =
+    pairsMemo(s, (SessionMemo.dir(d), maxDf))(computeNgramPairs(s, d, maxDf))
 
   /** Spark form of the `pairs` relation above. The inverted index carries
     * xxhash64(shingle), not the string: the equi-join shuffles 8-byte keys
@@ -452,9 +440,8 @@ object LlmText {
     * width follows input volume, not a global constant. */
   private def substrateShuffleWidth(s: SparkSession, d: String): Int = {
     val base = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val bytes = pathBytes(new java.io.File(
-      java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString,
-      "documents.parquet"))
+    val bytes = pathBytes(
+      new java.io.File(SessionMemo.dir(d), "documents.parquet"))
     math.max(base, math.min(1024, (bytes / (64L << 10)).toInt))
   }
 

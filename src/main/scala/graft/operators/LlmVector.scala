@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Spec
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.10 — vector-similarity and multimodal side of the LLM
   * pipeline: brute-force cosine top-k (the correctness baseline), LSH
@@ -956,56 +956,42 @@ object LlmVector {
     * both trainings are deterministic functions of the fixture's
     * sampleCap lowest vec_ids with a FIXED O(sampleCap·k·dim) driver
     * cost, but fixed ≠ free (~100 ms), and the pay-once resident below
-    * must not retrain per query. Evicted with the session (the
-    * pairsCache discipline). */
-  private val pqModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (Array[Array[Double]], Array[Array[Array[Double]]])]
+    * must not retrain per query. */
+  private val pqModels = new SessionMemo[String,
+    (Array[Array[Double]], Array[Array[Array[Double]]])]("pq-model")
 
   private def pqModel(s: SparkSession, d: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    pqModelCache.getOrElseUpdate((s, abs), {
-      graft.sources.SessionHooks.onApplicationEnd(s, s"pq-model-$abs") {
-        () => pqModelCache.remove((s, abs)); ()
-      }
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    pqModels(s, SessionMemo.dir(d)) {
       val emb = Tables.embeddings(s, d)
       (ivfCentroids(emb), pqCodebooks(emb))
-    })
-  }
+    }
 
-  private val pqResidentCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
+  private val pqResident = Scans.layoutMemo("pq-resident")
 
-  /** Pay-once (vec_id, cell, codes) resident layout (VERDICT r18 #4):
-    * the compressed relation a production vector store keeps RESIDENT
-    * — built once per corpus, queried many times — was previously
-    * re-encoded on every invocation, so the timed line billed
-    * build+query. Staged through the shared-scratch publish path
-    * (fingerprint = the embeddings fixture's mtime+size, the sjInput
+  /** Pay-once (vec_id, cell, codes) resident layout: the compressed
+    * relation a production vector store keeps RESIDENT — built once per
+    * corpus, queried many times — so the timed line bills only the
+    * query, not build+query. Staged through the shared-scratch publish
+    * path (fingerprint = the embeddings fixture's mtime+size, the sjInput
     * discipline; [[org.apache.spark.sql.graft.PqEncode]] and
     * [[org.apache.spark.sql.graft.NearestCells]] are deterministic, so
     * any JVM's build is byte-equal), Bench pre-pays it in
     * materialize_layout, and the query's steady time measures what the
     * production system pays per query: code scan + ADC + re-rank. */
   private[graft] def ivfPqResidentDir(s: SparkSession, d: String): String = {
-    import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(pqResidentCache, (s, abs), Scans.healthyStamped)
-    pqResidentCache.computeIfAbsent((s, abs), { _ =>
+    val abs = SessionMemo.dir(d)
+    pqResident(s, abs) {
       val (cents, books) = pqModel(s, d)
       val src = new java.io.File(abs, "embeddings.parquet")
-      // Fingerprint covers the quantizer params too (ADVICE r19 low):
-      // the staged (vec_id, cell, codes) content depends on pqM/pqKs/
-      // pqSubDim/ivfK (+ the iteration counts baked into the trainings),
-      // not just the source fixture — without them a param retune would
-      // serve a stale resident layout from a warm box's shared scratch,
-      // surfacing as a warm-box-only oracle mismatch.
+      // Fingerprint covers the quantizer params too: the staged
+      // (vec_id, cell, codes) content depends on pqM/pqKs/pqSubDim/ivfK
+      // (+ the iteration counts baked into the trainings), not just the
+      // source fixture — without them a param retune would serve a stale
+      // resident layout from a warm box's shared scratch, surfacing as a
+      // warm-box-only oracle mismatch.
       val fp = s"v1_m${pqM}k${pqKs}d${pqSubDim}c${ivfK}i${pqIters}" +
         s"j${ivfIters}_m${src.lastModified}_s${src.length}"
-      graft.sources.SessionHooks.onApplicationEnd(s, s"pq-res-$abs") {
-        () => pqResidentCache.remove((s, abs)); ()
-      }
       Scans.ensureShared(Scans.sharedScratchDir("pq_resident", abs, fp),
           Scans.healthyStamped) { tmp =>
         import org.apache.spark.sql.graft.{NearestCells, PqEncode}
@@ -1015,7 +1001,7 @@ object LlmVector {
           .write.parquet(tmp)
         Scans.stampExpected(tmp)
       }
-    })
+    }
   }
 
   /** Bench pre-pay hook: force the trainings + the resident layout so
@@ -1651,26 +1637,16 @@ object LlmVector {
       .orderBy(col("vec_id"))
   }
 
-  /** Memoized row count of the embeddings fixture per (session, path)
-    * (ADVICE r17 #3): [[semDedupDispatch]] previously ran a full
-    * count() scan on EVERY invocation just to pick a path, adding one
-    * extra pass of embeddings to every bench rep and plan capture of
-    * llm_semdedup. The fixture at a path is immutable for a session's
-    * lifetime (the [[LlmText]] pairsCache stance), so the count is too;
-    * entries evict with the session. */
-  private val embCountCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
+  /** Memoized row count of the embeddings fixture per (session, path):
+    * [[semDedupDispatch]] needs it on every invocation just to pick a
+    * path, and a count() scan there would add one extra pass of
+    * embeddings to every bench rep and plan capture of llm_semdedup. The
+    * fixture at a path is immutable for a session's lifetime (the
+    * [[LlmText]] pairs-memo stance), so the count is too. */
+  private val embCounts = new SessionMemo[String, Long]("emb-count")
 
-  private[graft] def embeddingsCount(s: SparkSession, d: String): Long = {
-    val key =
-      (s, java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString)
-    embCountCache.getOrElseUpdate(key, {
-      graft.sources.SessionHooks.onApplicationEnd(s, "llmvector-embcount") {
-        () => embCountCache.keys.filter(_._1 eq s).foreach(embCountCache.remove)
-      }
-      Tables.embeddings(s, d).count()
-    })
-  }
+  private[graft] def embeddingsCount(s: SparkSession, d: String): Long =
+    embCounts(s, SessionMemo.dir(d))(Tables.embeddings(s, d).count())
 
   /** Density dispatch for [[semDedup]] (the [[embedNearDupPairs]]
     * pattern): at fixture densities (n ≤ 8192) the exact k=16 path —

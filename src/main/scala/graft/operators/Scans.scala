@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.Spec
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.1 — scans / sources / sinks.
   *
@@ -322,40 +322,29 @@ object Scans {
     * bytes/targetFileSize and `maxRecordsPerFile`, and the rewrite runs
     * per partition-directory; the plan shape (scan → round-robin exchange
     * → write) is the same. */
-  /** One fragmented events copy per (session, sfDir) — VERDICT r10 #3.
-    * The 64-shard generation is sink_compacted's INPUT (the "long-lived
-    * ingest left thousands of small files" precondition), not the
-    * operation under demonstration; writing it on every invocation made
-    * the query the largest single bench line (~2–3.2 s) for cost that is
-    * pure setup. Memoized exactly like [[statefulCheckpoint]]: built once,
-    * shared by every invocation in the session, pre-payable by Bench as
-    * its own `materialize_frag` field so the timed line measures ONLY the
-    * compaction rewrite. The entry evicts with the session; the directory
-    * itself is scratch-registered for deletion at context end. */
-  private val fragCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  /** One fragmented events copy per (session, sfDir). The 64-shard
+    * generation is sink_compacted's INPUT (the "long-lived ingest left
+    * thousands of small files" precondition), not the operation under
+    * demonstration; writing it on every invocation would make the query
+    * the largest single bench line for cost that is pure setup. Memoized
+    * like [[statefulCheckpoint]]: built once, shared by every invocation
+    * in the session, pre-payable by Bench as its own `materialize_frag`
+    * field so the timed line measures ONLY the compaction rewrite. The
+    * directory itself is scratch-registered for deletion at context
+    * end. */
+  private val fragMemo = layoutMemo("compact-frag")
 
-  /** Memo revalidation shared by every path-valued scratch memo
-    * ([[fragCache]], [[ssCkptCache]]) — ADVICE r11 #1, generalized by the
-    * round-12 self-review. Both memos cache pid-keyed (JVM-shared)
-    * scratch paths under session-scoped keys, so another overlapping
-    * session's application-end hook can delete the directory a live memo
-    * still points at — and a crashed/concurrent delete can leave an
-    * EMPTY directory behind (rmRecursive removes children first), so
-    * bare isDirectory is not enough. `ok` states what a healthy build
-    * looks like; an entry failing it is dropped so computeIfAbsent
-    * rebuilds — restoring the self-healing the old per-invocation
-    * rewrites had. */
-  private[graft] def revalidateMemo(
-      cache: java.util.concurrent.ConcurrentHashMap[
-        (org.apache.spark.sql.SparkSession, String), String],
-      key: (org.apache.spark.sql.SparkSession, String),
-      ok: java.io.File => Boolean): Unit = {
-    val cached = cache.get(key)
-    if (cached != null && !ok(new java.io.File(cached)))
-      cache.remove(key, cached)
-  }
+  /** A [[SessionMemo]] of staged layout directories. The memos cache
+    * pid-keyed (JVM-shared) scratch or shared paths under session-scoped
+    * keys, so another overlapping session's application-end hook can
+    * delete the directory a live entry still points at, and a crashed or
+    * concurrent delete can leave it PARTIAL (rmRecursive removes children
+    * in unspecified order). Health is therefore the exact stamped count
+    * ([[healthyStamped]]), not bare isDirectory or any-shard-present: an
+    * entry failing it is dropped and rebuilt instead of serving a
+    * truncated layout. */
+  private[graft] def layoutMemo(name: String): SessionMemo[String, String] =
+    new SessionMemo(name, p => healthyStamped(new java.io.File(p)))
 
   /** A directory that still holds at least one entry matching `p`. */
   private[graft] def dirWith(p: String => Boolean)(f: java.io.File): Boolean =
@@ -411,24 +400,16 @@ object Scans {
     }
 
   private[graft] def fragmentedEvents(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // healthy = the 64-shard copy is COMPLETE (exact stamped count — a
-    // partial delete must rebuild, not silently compact fewer rows)
-    revalidateMemo(fragCache, (s, abs), healthyStamped)
-    fragCache.computeIfAbsent((s, abs), { _ =>
+      d: String): String =
+    fragMemo(s, SessionMemo.dir(d)) {
       val frag = scratch(s, "compact_frag", d)
       Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
         .repartition(64)
         .write.mode("overwrite").parquet(frag)
       stampExpected(frag)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"compact-frag-$abs") {
-        () => fragCache.remove((s, abs)); ()
-      }
       frag
-    })
-  }
+    }
 
   private val sinkCompacted = Spec(
     "sink_compacted",
@@ -953,42 +934,37 @@ object Scans {
     * deterministic — a single AvailableNow batch over a one-file parquet
     * series, one shuffle partition — so every consumer sees the identical
     * state-version lineage (batch 0 only) and the two registry rows pay
-    * for ONE build per run instead of two (VERDICT r9 #1/#7). Memoized in
-    * a ConcurrentHashMap; the entry evicts with the session. */
-  private val ssCkptCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+    * for ONE build per run instead of two.
+    *
+    * Healthy = the checkpoint still has a committed batch (the statestore
+    * and state-metadata readers both need commits/<batchId> to resolve a
+    * batch to read) AND its offsets/ + state/ siblings survive:
+    * rmRecursive deletes children in unspecified order, so a crashed or
+    * partial external delete can leave commits/ standing while state/ or
+    * offsets/ are already gone, and a commits-only check would keep the
+    * entry alive pointing at an unreadable checkpoint. Same
+    * cross-session scratch-delete hazard as [[layoutMemo]]. */
+  private val ssCkptMemo = new SessionMemo[String, String]("ss-ckpt",
+    ckpt =>
+      dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "commits")) &&
+        dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "offsets")) &&
+        dirWith(_ => true)(new java.io.File(ckpt, "state")))
 
   private def statefulCheckpoint(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import org.apache.spark.sql.types._
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // healthy = the checkpoint still has a committed batch (the statestore
-    // and state-metadata readers both need commits/<batchId> to resolve a
-    // batch to read) AND its offsets/ + state/ siblings survive — ADVICE
-    // r12 #1: rmRecursive deletes children in unspecified order, so a
-    // crashed/partial external delete can leave commits/ standing while
-    // state/ or offsets/ are already gone, and a commits-only check would
-    // keep the memo alive pointing at an unreadable checkpoint. Same
-    // cross-session scratch-delete hazard as the fragmented-events memo,
-    // same self-heal (see revalidateMemo).
-    revalidateMemo(ssCkptCache, (s, abs), ckpt =>
-      dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "commits")) &&
-        dirWith(_.forall(_.isDigit))(new java.io.File(ckpt, "offsets")) &&
-        dirWith(_ => true)(new java.io.File(ckpt, "state")))
-    ssCkptCache.computeIfAbsent((s, abs), { _ =>
+    ssCkptMemo(s, SessionMemo.dir(d)) {
       val base = scratch(s, "statestore", d)
       val run = streamRuns.incrementAndGet()
       val src = s"$base/src"
       val ckpt = s"$base/ckpt_$run"
       s.range(0, 600).select(col("id").as("v"))
         .coalesce(1).write.mode("overwrite").parquet(src)
-      // Build the checkpoint in a 1-shuffle-partition session clone
-      // (VERDICT r9 #1): 7 keys need nowhere near 32 state files per
-      // commit, and the batch reads take their layout from the
-      // checkpoint itself — same rows, 32× less state I/O. AvailableNow
-      // processes the one parquet batch and self-terminates (no
-      // processAllAvailable round-trips).
+      // Build the checkpoint in a 1-shuffle-partition session clone:
+      // 7 keys need nowhere near 32 state files per commit, and the batch
+      // reads take their layout from the checkpoint itself — same rows,
+      // 32× less state I/O. AvailableNow processes the one parquet batch
+      // and self-terminates (no processAllAvailable round-trips).
       val s2 = fewPartitionSession(s, 1)
       val stream = s2.readStream
         .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
@@ -1002,11 +978,8 @@ object Scans {
       try require(q.awaitTermination(120000),
         "statestore checkpoint build did not finish in 120 s")
       finally q.stop()
-      graft.sources.SessionHooks.onApplicationEnd(s, s"ss-ckpt-$abs") {
-        () => ssCkptCache.remove((s, abs)); ()
-      }
       ckpt
-    })
+    }
   }
 
   /** Pre-pay hooks for Bench's materialize_layout phase (VERDICT r16

@@ -3,62 +3,48 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-keyed memo for PERSISTED helper relations (VERDICT r4 #7).
+/** Session-keyed memo for PERSISTED helper relations.
   *
   * Several operators materialize a small derived relation that more than
   * one part of their plan consumes — `llm_lm_score`'s bigram LM table,
   * `join_fuzzy`'s name dictionary, `win_ntile`'s range-partitioned rank
-  * keys. Before r5 each called `.persist()` ad hoc: correct (CacheManager
-  * dedups repeat invocations by analyzed plan) but unaccounted — the entry
-  * lived for the whole session even after a multi-sf test moved on to
-  * another sfDir, and nothing could enumerate or release what an sfDir had
-  * pinned. This memo gives those persists one home with the same lifecycle
-  * discipline the ngram pairsCache established:
+  * keys. Calling `.persist()` ad hoc is correct (CacheManager dedups
+  * repeat invocations by analyzed plan) but unaccounted: the entry lives
+  * for the whole session even after a multi-sf test moved on to another
+  * sfDir, and nothing can enumerate or release what an sfDir has pinned.
+  * This memo gives those persists one home on a [[SessionMemo]]:
   *
   *  - keyed by (session, op, absolutized sfDir) — an entry is only ever
   *    reused by the session that built it against the same fixture path;
   *  - [[evictSfDir]] unpersists and drops every entry an sfDir pinned, so
   *    a multi-sf run (tests; a future multi-corpus driver) can assert
   *    nothing outlives the dir's last use — `graft.Verify` calls it on
-  *    exit and CacheHygieneSpec asserts the blocks are actually gone;
-  *  - application-end eviction drops a stopped session's entries so a
-  *    session-cycling harness cannot accumulate references to dead
-  *    sessions (the ADVICE r2 pattern; no unpersist there — the dying
-  *    context is already releasing its blocks).
+  *    exit, and EdgeCasesSpec's evictSfDir test asserts the plan leaves
+  *    the CacheManager;
+  *  - application-end eviction drops a stopped session's entries (no
+  *    unpersist there — the dying context is already releasing its
+  *    blocks).
   *
   * At 100 TB the entries stay driver-cheap: each is a logical plan plus a
   * persisted footprint the OPERATOR chose (two columns of rank keys, a
   * vocab²-bounded LM table, a dictionary column — never the corpus).
   */
 object RelationCache {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  private def norm(sfDir: String): String =
-    java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
-
-  private def evictOnStop(s: SparkSession): Unit =
-    SessionHooks.onApplicationEnd(s, "relation-cache") { () =>
-      cache.keys.filter(_._1 eq s).foreach(cache.remove)
-    }
+  private val memo = new SessionMemo[(String, String), DataFrame]("relations")
 
   /** Build-once-then-persist `df` for (`s`, `op`, `sfDir`). The builder
     * runs only on miss; the persisted DataFrame is shared by every later
     * call with the same key. */
   def getOrPersist(s: SparkSession, op: String, sfDir: String,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      (build: => DataFrame): DataFrame = {
-    evictOnStop(s)
-    cache.getOrElseUpdate((s, op, norm(sfDir)), build.persist(level))
-  }
+      (build: => DataFrame): DataFrame =
+    memo(s, (op, SessionMemo.dir(sfDir)))(build.persist(level))
 
   /** Unpersist and forget every relation `sfDir` pinned in session `s`.
     * Blocking=false: block release is asynchronous and the entries are
     * already unreachable through the cache. */
   def evictSfDir(s: SparkSession, sfDir: String): Unit = {
-    val abs = norm(sfDir)
-    cache.keys.filter(k => (k._1 eq s) && k._3 == abs).foreach { k =>
-      cache.remove(k).foreach(_.unpersist(blocking = false))
-    }
+    val abs = SessionMemo.dir(sfDir)
+    memo.evict(s)(_._2 == abs).foreach(_.unpersist(blocking = false))
   }
 }

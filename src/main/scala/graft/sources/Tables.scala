@@ -21,75 +21,57 @@ object Tables {
     * for a session's lifetime (driver contract), so the lazily-built
     * DataFrame — still just a logical plan, nothing is cached/executed —
     * is safely shared across queries. Keyed by session because a plan is
-    * only valid in the session that built it. Entries are one per
-    * (session, fixture file) — ≤ ~a dozen per session, each a logical plan
-    * + file listing — and a stop-listener evicts a session's entries when
-    * its context ends, so even a session-cycling harness cannot accumulate
-    * references to dead sessions (ADVICE r2). */
-  private val relationCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * only valid in the session that built it; entries are one per
+    * (session, fixture file), each a logical plan + file listing. */
+  private val relations = new SessionMemo[String, DataFrame]("tables")
 
-  /** First-seen (mtime, length) per (session, fixture path) — ADVICE r10
-    * #1, hardened per ADVICE r11 #2/#3. The memoized relation above
-    * caches the parquet footer read (and [[eventsRawTsType]] pins the
-    * streaming schema to it), which is only sound under the driver
-    * contract "fixtures are immutable for a session's lifetime". The
-    * driver HAS regenerated `/root/testdata` in place twice already
-    * (2026-08-13 and 2026-08-14, between sessions — both absorbed); if
-    * it ever regenerates MID-session, the next [[load]]/[[eventsRaw]]
-    * call fails here with one attributable error naming the file,
-    * instead of surfacing as a stale-plan hash mismatch or a silently
-    * skewed streaming schema pin. The baseline records mtime AND length
-    * because mtime alone can be preserved by `cp -p`/`rsync -t`/coarse
-    * filesystem timestamp granularity — a regenerated parquet file
-    * virtually never preserves both (the guard still cannot catch a
-    * same-length, same-mtime rewrite; FixtureContractSpec's content pins
-    * are the backstop for that). Checked on EVERY call (one stat(2) per
-    * query build — noise next to the footer read the cache avoids).
-    * Keyed and evicted exactly like the relation entries, so a
-    * post-regeneration NEW session legitimately re-records fresh
-    * baselines. */
-  private val mtimeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, Long)]
+  /** First-seen (mtime, length) per (session, fixture path). The memoized
+    * relation above caches the parquet footer read (and
+    * [[eventsRawTsType]] pins the streaming schema to it), which is only
+    * sound under the driver contract "fixtures are immutable for a
+    * session's lifetime". The driver has regenerated the fixtures in
+    * place before (between sessions); if it ever regenerates MID-session,
+    * the next [[load]]/[[eventsRaw]] call fails here with one attributable
+    * error naming the file, instead of surfacing as a stale-plan hash
+    * mismatch or a silently skewed streaming schema pin. The baseline
+    * records mtime AND length because mtime alone can be preserved by
+    * `cp -p`/`rsync -t`/coarse filesystem timestamp granularity — a
+    * regenerated parquet file virtually never preserves both (the guard
+    * still cannot catch a same-length, same-mtime rewrite;
+    * FixtureContractSpec's content pins are the backstop for that).
+    * Checked on EVERY call (one stat(2) per query build — noise next to
+    * the footer read the memo avoids). Evicted with the session like the
+    * relations, so a post-regeneration NEW session legitimately
+    * re-records fresh baselines. */
+  private val firstSeen = new SessionMemo[String, (Long, Long)]("mtimes")
 
   private def guardMtime(s: SparkSession, rawPath: String): Unit = {
-    // Canonical key (same normalization as Scans.scratch/fragmentedEvents):
-    // two spellings of the same fixture path must share ONE first-seen
-    // baseline, or a regeneration between their first touches slips
-    // through as a fresh baseline on the second spelling.
-    val path = java.nio.file.Paths.get(rawPath)
-      .toAbsolutePath.normalize.toString
+    // Canonical key: two spellings of the same fixture path must share ONE
+    // first-seen baseline, or a regeneration between their first touches
+    // slips through as a fresh baseline on the second spelling.
+    val path = SessionMemo.dir(rawPath)
     val f = new java.io.File(path)
     val now = (f.lastModified(), f.length())
     // Missing file (lastModified == 0): don't record a baseline — let
     // spark.read.parquet surface the real missing-file error, and a later
     // successful load establish the baseline. Recording 0 here would turn
     // every retry after the file appears into a misleading
-    // "changed mid-session" failure (ADVICE r11 #2).
+    // "changed mid-session" failure.
     if (now._1 == 0L) return
-    mtimeCache.putIfAbsent((s, path), now) match {
-      case Some(first) if first != now =>
-        throw new IllegalStateException(
-          s"fixture $path changed mid-session (mtime,len $first -> $now): " +
-            "the driver regenerated testdata in place, so every memoized " +
-            "relation and schema pin for it is stale — restart the " +
-            "session/JVM and re-run (FixtureContractSpec names any " +
-            "logical-schema drift)")
-      case _ => ()
-    }
+    val first = firstSeen(s, path)(now)
+    if (first != now)
+      throw new IllegalStateException(
+        s"fixture $path changed mid-session (mtime,len $first -> $now): " +
+          "the driver regenerated testdata in place, so every memoized " +
+          "relation and schema pin for it is stale — restart the " +
+          "session/JVM and re-run (FixtureContractSpec names any " +
+          "logical-schema drift)")
   }
 
-  private def evictOnStop(s: SparkSession): Unit =
-    SessionHooks.onApplicationEnd(s, "tables") { () =>
-      relationCache.keys.filter(_._1 eq s).foreach(relationCache.remove)
-      mtimeCache.keys.filter(_._1 eq s).foreach(mtimeCache.remove)
-    }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    evictOnStop(spark)
-    guardMtime(spark, s"$sfDir/$name.parquet")
-    relationCache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    val path = s"$sfDir/$name.parquet"
+    guardMtime(spark, path)
+    relations(spark, path)(spark.read.parquet(path))
   }
 
   /** `events.ts` has shipped in two fixture generations: parquet
@@ -104,11 +86,10 @@ object Tables {
     * lazy evaluation (the scan reads the conf at execution).
     * [[events]] normalizes both generations to the same column type. */
   private def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    evictOnStop(s)
-    guardMtime(s, s"$d/events.parquet")
+    val path = s"$d/events.parquet"
+    guardMtime(s, path)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    relationCache.getOrElseUpdate((s, s"$d/events.parquet#nanosAsLong"),
-      s.read.parquet(s"$d/events.parquet"))
+    relations(s, s"$path#nanosAsLong")(s.read.parquet(path))
   }
 
   /** The `ts` type as stored in the fixture file (LongType for the legacy

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Spec
 import graft.functions.Det
-import graft.sources.Tables
+import graft.sources.{SessionMemo, Tables}
 
 /** SURVEY.md §2.9 + §2.3 streaming joins — the reference's core capability
   * (stream-stream / stream-static joins, windowed aggregation, watermarks),
@@ -616,7 +616,7 @@ object StreamingOps {
     * Cost shape (first sf0.1 sample 7.6 s, retune target ≤ ~1.5 s): the
     * two-file input staging is the query's PRECONDITION, not its
     * demonstration — memoized per (session, sfDir) in [[twsInput]] with
-    * the standard revalidateMemo self-heal — and the streaming query
+    * the standard layout-memo self-heal — and the streaming query
     * runs in a 4-shuffle-partition session clone (VERDICT r9 #1
     * rationale: ~1.5k funnel keys need nowhere near 32 RocksDB store
     * instances per micro-batch; the clone also scopes the mandatory
@@ -628,18 +628,12 @@ object StreamingOps {
     * spanning users exist and maxFilesPerTrigger=1 yields exactly two
     * micro-batches. Same pid-keyed-scratch-under-session-key hazard and
     * self-heal as Scans.fragmentedEvents. */
-  private val twsInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val twsInMemo = graft.operators.Scans.layoutMemo("tws-in")
 
   private[graft] def twsInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // exact stamped count (round-13 self-review): both halves must be
-    // present AND whole, or the memo rebuilds
-    Scans.revalidateMemo(twsInCache, (s, abs), Scans.healthyStamped)
-    twsInCache.computeIfAbsent((s, abs), { _ =>
+    twsInMemo(s, SessionMemo.dir(d)) {
       val inDir = Scans.scratch(s, "tws_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -654,11 +648,8 @@ object StreamingOps {
       ev.filter(pmod(col("es"), lit(2)) === 1).coalesce(1)
         .write.mode("append").parquet(inDir)
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"tws-in-$abs") {
-        () => twsInCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
   /** Memoized two-file staging for `stream_update_mode`: the (user_id,
@@ -693,16 +684,12 @@ object StreamingOps {
     }
   }
 
-  private val updInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val updInMemo = graft.operators.Scans.layoutMemo("upd-in")
 
   private[graft] def updInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(updInCache, (s, abs), Scans.healthyStamped)
-    updInCache.computeIfAbsent((s, abs), { _ =>
+    updInMemo(s, SessionMemo.dir(d)) {
       val inDir = Scans.scratch(s, "upd_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -711,16 +698,11 @@ object StreamingOps {
         ev.filter(pmod(col("es"), lit(2)) === 0),
         ev.filter(pmod(col("es"), lit(2)) === 1)))
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"upd-in-$abs") {
-        () => updInCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
-  private val sjInCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val sjInMemo = graft.operators.Scans.layoutMemo("sj-in")
 
   /** Data chunks in the sjInput staging (sentinels add 2 more pieces).
     * 2 is the proof minimum — see [[sjInput]]'s docstring. */
@@ -758,30 +740,24 @@ object StreamingOps {
   private[graft] def sjInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(sjInCache, (s, abs), Scans.healthyStamped)
-    sjInCache.computeIfAbsent((s, abs), { _ =>
-      // Session-independent shared staging (VERDICT r17 #4): the chunks
-      // are a pure function of the events fixture, so key the directory
-      // by its path + mtime + size and let every JVM on this box reuse
-      // one build — a fresh bench JVM previously re-paid ~17 MB of
-      // staging shuffle and seconds of materialize_layout here. The
-      // rename publish preserves the chunk files' admission-order
-      // mtimes ([[writeStampedPieces]]), which is all the file source's
+    val abs = SessionMemo.dir(d)
+    sjInMemo(s, abs) {
+      // Session-independent shared staging: the chunks are a pure
+      // function of the events fixture, so key the directory by its
+      // path + mtime + size and let every JVM on this box reuse one
+      // build — a fresh bench JVM would otherwise re-pay the staging
+      // shuffle and seconds of materialize_layout here. The rename
+      // publish preserves the chunk files' admission-order mtimes
+      // ([[writeStampedPieces]]), which is all the file source's
       // oldest-first ordering reads — absolute stamp values don't
-      // matter, only their order.
+      // matter, only their order. Only the memo entry evicts with the
+      // session; the shared dir itself survives for the next JVM.
       val src = new java.io.File(abs, "events.parquet")
       // the chunk count is part of the key: a layout staged under a
       // different chunking is healthy-by-stamp but WRONG for the floor
-      // this build expects (the r18->r19 4->2 cut would otherwise keep
-      // serving the old 6-piece staging on a warm box forever)
+      // this build expects (a chunk-count change would otherwise keep
+      // serving the old staging on a warm box forever)
       val fp = s"c${sjChunks}_m${src.lastModified}_s${src.length}"
-      // evict only the MEMO entry with the session (the map would
-      // otherwise pin dead sessions); the shared dir itself survives
-      // for the next JVM — that is the point.
-      graft.sources.SessionHooks.onApplicationEnd(s, s"sj-in-$abs") {
-        () => sjInCache.remove((s, abs)); ()
-      }
       Scans.ensureShared(Scans.sharedScratchDir("sj_in", abs, fp),
           Scans.healthyStamped) { inDir =>
         val ev = Tables.events(s, d)
@@ -818,7 +794,7 @@ object StreamingOps {
         writeStampedPieces(inDir, chunks ++ Seq(sentinel(1), sentinel(2)))
         Scans.stampExpected(inDir)
       }
-    })
+    }
   }
 
   /** The real watermarked stream-stream interval join over the
@@ -1074,16 +1050,12 @@ object StreamingOps {
     * output would miss every session and the oracle would fail loudly —
     * nothing silent rests on it. Same memo/self-heal pattern as
     * [[twsInput]]; exact-count stamp covers all three files. */
-  private val twsTimerCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]
+  private val twsTimerMemo = graft.operators.Scans.layoutMemo("tws-timer-in")
 
   private[graft] def twsTimerInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
     import graft.operators.Scans
-    val abs = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    Scans.revalidateMemo(twsTimerCache, (s, abs), Scans.healthyStamped)
-    twsTimerCache.computeIfAbsent((s, abs), { _ =>
+    twsTimerMemo(s, SessionMemo.dir(d)) {
       val inDir = Scans.scratch(s, "tws_timer_in", d)
       Scans.rmRecursive(new java.io.File(inDir))
       val ev = Tables.events(s, d)
@@ -1099,11 +1071,8 @@ object StreamingOps {
         ev.filter(col("es") >= cut).select(col("user_id"), col("ts")),
         sentinel(-1L, mx + 7200000000L)))
       Scans.stampExpected(inDir)
-      graft.sources.SessionHooks.onApplicationEnd(s, s"tws-timer-in-$abs") {
-        () => twsTimerCache.remove((s, abs)); ()
-      }
       inDir
-    })
+    }
   }
 
   /** Event-time TIMERS on `transformWithState` (VERDICT r13 #1): gap

@@ -466,6 +466,103 @@ class EdgeCasesSpec extends AnyFunSuite {
         "delete — the health check is not exact-count")
   }
 
+  test("SessionMemo: concurrent callers of one key run the builder once") {
+    import java.util.concurrent.{CountDownLatch, atomic}
+    val memo = new graft.sources.SessionMemo[String, Int]("t-once")
+    val builds = new atomic.AtomicInteger
+    val start = new CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val threads = (1 to 8).map { _ =>
+      new Thread(() => {
+        start.await()
+        results.add(memo(spark, "k") {
+          Thread.sleep(200) // hold the build open while the others arrive
+          builds.incrementAndGet()
+        })
+        ()
+      })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join(30000))
+    assert(builds.get == 1, s"builder ran ${builds.get} times for one key")
+    assert(results.size == 8 && results.toArray.forall(_ == 1),
+      s"callers saw different values: $results")
+    assert(memo(spark, "k")(builds.incrementAndGet()) == 1,
+      "a later call rebuilt a cached entry")
+  }
+
+  test("SessionMemo: a builder that throws is retried by the next call") {
+    val memo = new graft.sources.SessionMemo[String, String]("t-retry")
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException] {
+      memo(spark, "k") {
+        calls.incrementAndGet(); throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    assert(memo(spark, "k") { calls.incrementAndGet(); "ok" } == "ok",
+      "the failed build was cached")
+    assert(calls.get == 2)
+    assert(memo(spark, "k")("rebuilt") == "ok")
+  }
+
+  test("SessionMemo: a cached value that fails `healthy` is rebuilt") {
+    val alive = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val memo = new graft.sources.SessionMemo[String, Int]("t-healthy",
+      _ => alive.get)
+    assert(memo(spark, "k")(1) == 1)
+    assert(memo(spark, "k")(2) == 1, "healthy entry must be reused")
+    alive.set(false)
+    assert(memo(spark, "k")(3) == 3, "unhealthy entry was served")
+    alive.set(true)
+    assert(memo(spark, "k")(4) == 3, "the rebuilt entry was not cached")
+  }
+
+  test("SessionMemo: a builder that calls another memo completes") {
+    val inner = new graft.sources.SessionMemo[String, Int]("t-inner")
+    val outer = new graft.sources.SessionMemo[String, Int]("t-outer")
+    assert(outer(spark, "a")(inner(spark, "a")(20) + 1) == 21)
+    // same memo, nested keys: a builder running under the map's bin lock
+    // would hit ConcurrentHashMap's recursive-update check here
+    val keys = (0 until 64).map(_.toString)
+    val same = new graft.sources.SessionMemo[String, Int]("t-nested")
+    keys.foreach { k =>
+      assert(same(spark, k)(same(spark, k + "'")(k.toInt) * 2) == k.toInt * 2)
+    }
+    assert(inner(spark, "a")(0) == 20)
+  }
+
+  test("RelationCache: evictSfDir releases the persisted plan") {
+    val cm = spark.sharedState.cacheManager
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean = cm
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .isDefined
+    val dirA = java.nio.file.Files.createTempDirectory("graft_rc_a").toString
+    val dirB = java.nio.file.Files.createTempDirectory("graft_rc_b").toString
+    try {
+      val a = graft.sources.RelationCache.getOrPersist(spark, "t_rc", dirA) {
+        spark.range(0, 1000).selectExpr("id * 7919 AS rc_a")
+      }
+      val b = graft.sources.RelationCache.getOrPersist(spark, "t_rc", dirB) {
+        spark.range(0, 1000).selectExpr("id * 7907 AS rc_b")
+      }
+      assert(a.count() == 1000 && b.count() == 1000)
+      assert(cached(a) && cached(b), "getOrPersist did not persist the plan")
+      assert(graft.sources.RelationCache.getOrPersist(spark, "t_rc",
+        dirA + "/.")(fail("builder re-ran for a cached key")) eq a,
+        "another spelling of the same sfDir missed the memo")
+      graft.sources.RelationCache.evictSfDir(spark, dirA)
+      assert(!cached(a), "evictSfDir left the plan in the CacheManager")
+      assert(cached(b), "evictSfDir released another sfDir's relation")
+      graft.sources.RelationCache.evictSfDir(spark, dirB)
+      assert(!cached(b))
+    } finally {
+      graft.operators.Scans.rmRecursive(new java.io.File(dirA))
+      graft.operators.Scans.rmRecursive(new java.io.File(dirB))
+    }
+  }
+
   test("mid-session fixture regeneration fails loudly at the next load") {
     // ADVICE r10 #1: the memoized relations and the streaming schema pin
     // rest on the driver contract "fixtures are immutable for a session's
