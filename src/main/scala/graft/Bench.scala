@@ -152,9 +152,6 @@ object Bench {
       // a retry later rebuilds).
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
       val lanes: Seq[() => Unit] = Seq(
         () => {
           graft.operators.Joins.materializeLayouts(spark, sfDir): Unit
@@ -168,7 +165,6 @@ object Bench {
         () => graft.operators.Scans.warmDerby(spark, sfDir),
         () => graft.operators.Scans.warmSocketSource(spark),
         () => graft.operators.LlmVector.materializeIvfPqLayout(spark, sfDir))
-      val futures = lanes.map(f => Future(scala.util.Try(f())))
       // Drain EVERY lane before surfacing any failure (ADVICE r21 #1):
       // the inner Try only catches NonFatal, so a fatal lane error
       // (LinkageError/OOM in a classload-heavy warm) fails the Future
@@ -177,9 +173,11 @@ object Bench {
       // hazard the Try-wrapping was added to close. Await.ready never
       // throws the lane's error; the flatten folds the Future's own
       // Try into the lane Try so collectFirst sees both failure kinds.
-      futures.foreach(Await.ready(_, Duration.Inf))
-      val done = futures.map(_.value.get.flatten)
-      pool.shutdown()
+      val done = graft.operators.Overlap.overlapped(4) { implicit ec =>
+        val futures = lanes.map(f => Future(scala.util.Try(f())))
+        futures.foreach(Await.ready(_, Duration.Inf))
+        futures.map(_.value.get.flatten)
+      }
       done.collectFirst { case scala.util.Failure(e) => throw e }
         .foreach(identity)
       // The lane membership above preserves every prior round's prepay

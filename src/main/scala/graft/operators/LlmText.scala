@@ -358,7 +358,8 @@ object LlmText {
     * generator emits longs directly (the shingle string now exists only
     * transiently inside the lambda). Measured on the build's cold pass —
     * the pass every bench/JVM pays once into the postings cache —
-    * 1.28 → 0.69 s, warm 0.33 → 0.28 s (PairsProbe, sf0.1 ×32).
+    * 1.28 → 0.69 s, warm 0.33 → 0.28 s (stage replay to a noop sink,
+    * sf0.1 ×32).
     * Distinctness therefore happens on the hash rather than on the
     * string: the two differ only if xxhash64 collides WITHIN one
     * document's shingle set (~w²/2⁶⁴ for a w-shingle doc), in which case

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.Spec
 import graft.sources.{SessionMemo, Tables}
+import graft.streaming.MicroBatch
 
 /** SURVEY.md §2.1 — scans / sources / sinks.
   *
@@ -931,7 +932,7 @@ object Scans {
   /** One checkpointed streaming aggregation per (session, sfDir), shared
     * by `scan_state_store` (reads the state DATA) and
     * `scan_state_metadata` (reads the state METADATA): the build is
-    * deterministic — a single AvailableNow batch over a one-file parquet
+    * deterministic — a single run-to-end batch over a one-file parquet
     * series, one shuffle partition — so every consumer sees the identical
     * state-version lineage (batch 0 only) and the two registry rows pay
     * for ONE build per run instead of two.
@@ -963,21 +964,15 @@ object Scans {
       // Build the checkpoint in a 1-shuffle-partition session clone:
       // 7 keys need nowhere near 32 state files per commit, and the batch
       // reads take their layout from the checkpoint itself — same rows,
-      // 32× less state I/O. AvailableNow processes the one parquet batch
-      // and self-terminates (no processAllAvailable round-trips).
-      val s2 = fewPartitionSession(s, 1)
-      val stream = s2.readStream
+      // 32× less state I/O.
+      val s2 = MicroBatch.session(s, 1)
+      MicroBatch.runToEnd(s2.readStream
         .schema(StructType(Seq(StructField("v", LongType)))).parquet(src)
         .withColumn("k", col("v") % 7)
         .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-      val name = "graft_statestore_" + run
-      val q = stream.writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000),
-        "statestore checkpoint build did not finish in 120 s")
-      finally q.stop()
+        .writeStream.format("memory").queryName("graft_statestore_" + run)
+        .outputMode("complete").option("checkpointLocation", ckpt),
+        "statestore checkpoint build")
       ckpt
     }
   }
@@ -999,74 +994,24 @@ object Scans {
     * socket stream in a JVM bills ~3-4 s of provider classload +
     * streaming-engine boot that the r17 driver capture kept flagging as
     * a spike on source_stream_socket (5.16 s billed, 0.96 s retime). A
-    * two-word warm stream through the same loopback-feeder plumbing
+    * one-line run of the row's own feeder and drain ([[socketWordCount]])
     * pays exactly those JVM-wide costs in materialize_layout; the timed
     * row still does all its own per-query work.
     *
     * ADVICE r18 #2: the warm is purely an optimization, so a flaky
     * warm-up must cost one spike, never the bench — failures are logged
-    * and swallowed here. Inside, the feeder closes its socket/writer
-    * deterministically AFTER the drain (an eager close could reset the
-    * connection under the still-draining source; the old code leaked
-    * both to GC, whose finalizer-driven close had the same hazard at an
-    * arbitrary time), and the warm's memory-sink table is dropped. */
+    * and swallowed here. The warm's memory-sink table is dropped. */
   private[graft] def warmSocketSource(
       s: org.apache.spark.sql.SparkSession): Unit =
-    try warmSocketSourceImpl(s)
-    catch { case e: Throwable =>
+    try {
+      val name = "graft_socket_warm_" + streamRuns.incrementAndGet()
+      val df = socketWordCount(s, 1, name)
+      df.sparkSession.catalog.dropTempView(name): Unit
+    } catch { case e: Throwable =>
       org.slf4j.LoggerFactory.getLogger("graft.Scans").warn(
         s"socket warm failed (continuing — the warm is an optimization, " +
           s"the first timed socket row just pays the first-touch): $e")
     }
-
-  private def warmSocketSourceImpl(
-      s: org.apache.spark.sql.SparkSession): Unit = {
-    val server = new java.net.ServerSocket(0, 1,
-      java.net.InetAddress.getLoopbackAddress)
-    // Counted down once the drain is complete: the feeder holds its end
-    // open until then, and only then closes writer + socket itself.
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val feeder = new Thread(() => {
-      var sock: java.net.Socket = null
-      var out: java.io.PrintWriter = null
-      try {
-        sock = server.accept()
-        out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-          sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-        out.print("warm up\n")
-        out.flush()
-        drained.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
-      } catch { case _: Throwable => () }
-      finally {
-        if (out != null) { try out.close() catch { case _: Throwable => () } }
-        if (sock != null) { try sock.close() catch { case _: Throwable => () } }
-      }
-    }, "graft-socket-warm")
-    feeder.setDaemon(true)
-    feeder.start()
-    val s2 = fewPartitionSession(s, 1)
-    val words = s2.readStream.format("socket")
-      .option("host", server.getInetAddress.getHostAddress)
-      .option("port", server.getLocalPort.toString)
-      .load()
-      .select(explode(split(col("value"), " ")).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val name = "graft_socket_warm_" + streamRuns.incrementAndGet()
-    val q = words.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(80))
-      .start()
-    try drainStream(q, 2L, "socket warm") { () =>
-      val r = s2.table(name).agg(sum(col("n"))).collect()(0)
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    finally {
-      drained.countDown()
-      q.stop()
-      try server.close() catch { case _: Throwable => () }
-      try s2.catalog.dropTempView(name) catch { case _: Throwable => () }
-    }
-  }
 
   private[graft] def warmDerby(s: org.apache.spark.sql.SparkSession,
       d: String): Unit = {
@@ -1159,11 +1104,9 @@ object Scans {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Det.dsum6(col("value")).as("sum_value"))
-    val name = "graft_src_stream_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    val name = MicroBatch.sinkName("graft_src_stream_", d)
+    MicroBatch.runToEnd(stream.writeStream.format("memory").queryName(name)
+      .outputMode("complete"), "file-source stream")
     s.table(name).orderBy(col("event_type"))
   }
 
@@ -1212,11 +1155,9 @@ object Scans {
       |FROM events GROUP BY 1
       |ORDER BY ws_us""".stripMargin) { (s, d) =>
     val stream = twoHourWindowAgg(eventsFileStream(s, d))
-    val name = "graft_src_stream_win_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    val name = MicroBatch.sinkName("graft_src_stream_win_", d)
+    MicroBatch.runToEnd(stream.writeStream.format("memory").queryName(name)
+      .outputMode("complete"), "file-source window stream")
     s.table(name).orderBy(col("ws_us"))
   }
 
@@ -1231,35 +1172,10 @@ object Scans {
     * which is itself the point: the source is the data. numPartitions=4
     * exercises the source's distributed shape (values are spread across
     * partitions, so the prefix provably needs all of them). Since round
-    * 10 this runs the `rate-micro-batch` member of the family under
-    * Trigger.AvailableNow (see the in-body comment for why the
+    * 10 this runs the `rate-micro-batch` member of the family to the end
+    * of its first batch (see the in-body comment for why the
     * wall-clock `rate` variant has a ~1 s drain floor). */
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Poll-drain a running streaming query until `have()` reaches `target`
-    * (shared by the rate and socket demos — one place owns the cap and the
-    * poll policy). processAllAvailable flushes what the source has
-    * delivered so far; sources that keep producing (rate) or deliver over
-    * a network buffer (socket) need the poll loop. The hard cap is 120 s —
-    * generous because the r8 driver bench proved multi-second machine-load
-    * stalls happen, and a cap abort here would fail the correctness row,
-    * not just slow it. The 10 ms poll (was 50 ms, VERDICT r9 #1) keeps the
-    * loop cheap — processAllAvailable itself blocks while the source has
-    * data, so the sleep only burns time when the stream is truly idle.
-    * `diag` is appended to the failure message so a feeder-side error
-    * (ADVICE r9 #2) surfaces as the CAUSE instead of a bare timeout. */
-  private def drainStream(q: org.apache.spark.sql.streaming.StreamingQuery,
-      target: Long, what: String, diag: () => String = () => "")(
-      have: () => Long): Unit = {
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    var n = -1L
-    while (n < target && System.nanoTime() < deadline) {
-      q.processAllAvailable()
-      n = have()
-      if (n < target) Thread.sleep(10)
-    }
-    require(n >= target, s"$what drained only $n of $target${diag()}")
-  }
 
   /** Session clone with few shuffle partitions for the tiny streaming
     * demos (VERDICT r9 #1): a complete-mode aggregate over a few hundred
@@ -1292,8 +1208,8 @@ object Scans {
     // member Spark added for exactly this: batch k carries values
     // [k·rowsPerBatch, (k+1)·rowsPerBatch) with no wall-clock coupling,
     // so with rowsPerBatch = n the FIRST batch is precisely the 0..n-1
-    // prefix and Trigger.AvailableNow processes it and self-terminates —
-    // no poll loop, no overshoot, ~0.3 s instead of ~1.6 s.
+    // prefix and the run-to-end trigger processes it and self-terminates
+    // — no poll loop, no overshoot, ~0.3 s instead of ~1.6 s.
     val stream = s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", n.toString)
       .option("numPartitions", "4")
@@ -1302,13 +1218,8 @@ object Scans {
     // Unique sink name per invocation: a same-session re-run must get a
     // fresh memory table, not the stopped predecessor's rows.
     val name = "graft_rate_stream_" + streamRuns.incrementAndGet()
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000),
-      "rate source did not finish its available-now batch in 120 s")
-    finally q.stop()
+    MicroBatch.runToEnd(stream.writeStream.format("memory").queryName(name)
+      .outputMode("append"), "rate source available-now batch")
     require(s.table(name).filter(col("value") < n).count() == n,
       s"rate source delivered an incomplete 0..${n - 1} prefix")
     s.table(name).filter(col("value") < n)
@@ -1344,12 +1255,21 @@ object Scans {
       |      SELECT 'w' || CAST(i % 3 AS VARCHAR) AS word FROM t)
       |SELECT word, COUNT(*) AS n FROM w
       |GROUP BY word ORDER BY word""".stripMargin) { (s, d) =>
-    val n = 500
+    // Unique sink name per invocation (streamRuns rationale above).
+    val name = "graft_socket_stream_" + streamRuns.incrementAndGet()
+    socketWordCount(s, 500, name).orderBy(col("word"))
+  }
+
+  /** The socket row's feeder + word count + poll drain over `n` lines,
+    * landing in the memory sink `name` of a 1-partition session clone
+    * (returned as that table); shared with [[warmSocketSource]]. */
+  private def socketWordCount(s: org.apache.spark.sql.SparkSession, n: Int,
+      name: String): org.apache.spark.sql.DataFrame = {
     val server = new java.net.ServerSocket(0, 1,
       java.net.InetAddress.getLoopbackAddress)
     @volatile var accepted: java.net.Socket = null
     // ADVICE r9 #2: a feeder failure must surface as the attributable
-    // CAUSE of a drain shortfall, not as a bare 120 s timeout — record
+    // CAUSE of a drain shortfall, not as a bare timeout — record
     // any feeder-side Throwable (and PrintWriter's swallowed IOExceptions
     // via checkError) and splice it into the drain failure message.
     @volatile var feederErr: Throwable = null
@@ -1376,24 +1296,13 @@ object Scans {
     // One-shuffle-partition session clone (VERDICT r9 #1): the
     // complete-mode aggregate commits per-shuffle-partition state every
     // micro-batch, and a 5-key word count needs exactly one.
-    val s2 = fewPartitionSession(s, 1)
+    val s2 = MicroBatch.session(s, 1)
     val words = s2.readStream.format("socket")
       .option("host", server.getInetAddress.getHostAddress)
       .option("port", server.getLocalPort.toString)
       .load()
       .select(explode(split(col("value"), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    // Unique sink name per invocation (streamRuns rationale above).
-    val name = "graft_socket_stream_" + streamRuns.incrementAndGet()
-    // 80 ms trigger: the loopback feeder lands all n lines in the source
-    // buffer within a few ms of connect, so spacing triggers lets one
-    // micro-batch carry (nearly) everything instead of back-to-back
-    // batches each paying plan + state-commit + sink-rewrite for a
-    // line fragment (measured: ~0.2 s faster than Trigger(0) here).
-    val q = words.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(80))
-      .start()
     def wordMass(): Long = {
       val r = s2.table(name).agg(sum(col("n"))).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -1401,20 +1310,23 @@ object Scans {
     def feederDiag(): String =
       if (feederErr == null) ""
       else s" (feeder failed: $feederErr)"
+    // The poll drain stops the query before the feeder's socket and the
+    // server close: an eager close could reset the connection under the
+    // still-draining source.
     try {
-      drainStream(q, 2L * n, "socket source", () => feederDiag())(
-        () => wordMass())
+      MicroBatch.pollDrain(words.writeStream.format("memory").queryName(name)
+        .outputMode("complete"), 2L * n, "socket source",
+        () => feederDiag())(() => wordMass())
       // exactly 2n: the feeder wrote exactly n two-word lines
       require(wordMass() == 2L * n,
         s"socket source overshot: ${wordMass()} words, expected ${2L * n}")
     } finally {
-      q.stop()
       try { if (accepted != null) accepted.close() } catch {
         case _: Throwable => ()
       }
       try server.close() catch { case _: Throwable => () }
     }
-    s2.table(name).orderBy(col("word"))
+    s2.table(name)
   }
 
   /** Streaming `readStream` over the events fixture exposed as a file-source
@@ -1477,15 +1389,13 @@ object Scans {
     // directories THIS run writes — stale batch=N dirs from an earlier run
     // with different batching would otherwise union into the read-back.
     rmRecursive(new java.io.File(out))
-    val q = eventsFileStream(s, d)
+    MicroBatch.runToEnd(eventsFileStream(s, d)
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      }, "foreachBatch sink stream")
     s.read.parquet(out)
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy(col("event_id"))
@@ -1559,9 +1469,7 @@ object Scans {
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    val key = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val tbl = s"graft_stream_land_$key"
+    val tbl = MicroBatch.sinkName("graft_stream_land_", d)
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     val whConf = s.conf.get("spark.sql.warehouse.dir")
     val whPath =
@@ -1570,19 +1478,10 @@ object Scans {
     rmRecursive(new java.io.File(new java.io.File(whPath), tbl))
     val cp = scratch(s, "stream_land_cp", d)
     rmRecursive(new java.io.File(cp))
-    val q = eventsFileStream(s, d)
+    MicroBatch.runToEnd(eventsFileStream(s, d)
       .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(tbl)
-    // Bounded like every other streaming row (ADVICE r14 #1): an
-    // unbounded awaitTermination on a wedged AvailableNow query would
-    // hang the whole verify/bench run; 180 s matches the StreamingOps
-    // pattern and fails loudly instead.
-    try require(q.awaitTermination(180000),
-      "stream-to-table landing did not finish in 180 s")
-    finally q.stop()
+      .writeStream.option("checkpointLocation", cp),
+      "stream-to-table landing", table = Some(tbl))
     s.table(tbl)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),

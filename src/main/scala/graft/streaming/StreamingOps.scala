@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Spec
 import graft.functions.Det
 import graft.sources.{SessionMemo, Tables}
@@ -41,7 +42,7 @@ object StreamingOps {
     * starvation, sink fan-out explosions, and batch skew all show up
     * here before they show up in lag. Deterministic because the input is
     * the memoized parity staging ([[updInput]]: one file per parity,
-    * admission-ordered, maxFilesPerTrigger=1 ⇒ exactly two data
+    * admission-ordered, one file per micro-batch ⇒ exactly two data
     * batches): batch 0 ingests the even-µs rows, batch 1 the odd-µs
     * rows, and the complete-mode sink emits the cumulative distinct-user
     * table each batch. The oracle recomputes all four numbers from
@@ -58,23 +59,14 @@ object StreamingOps {
       |  (SELECT COUNT(*) FROM e WHERE es % 2 = 1),
       |  (SELECT COUNT(DISTINCT user_id) FROM e)
       |ORDER BY batch_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    val inDir = updInput(s, d)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
-    val name = "graft_progress_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .groupBy(col("user_id")).count()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "progress query did not finish in 180 s")
-    finally q.stop()
+    val s2 = MicroBatch.session(s, 4)
+    val q = MicroBatch.runToEnd(
+      MicroBatch.replay(s2, updInput(s, d), updSchema)
+        .groupBy(col("user_id")).count()
+        .writeStream.format("memory")
+        .queryName(MicroBatch.sinkName("graft_progress_", d))
+        .outputMode("complete"),
+      "progress query")
     val rows = q.recentProgress.toSeq
       .filter(_.numInputRows > 0)
       .map(p => (p.batchId, p.numInputRows, p.sink.numOutputRows))
@@ -91,7 +83,7 @@ object StreamingOps {
     * landed table always holds ONE row per key with (max event time,
     * running count) — state the APPEND-mode file sink structurally
     * cannot express (it can never retract a key's previous row). The
-    * two-batch parity staging ([[updInput]], maxFilesPerTrigger=1) makes
+    * two-batch parity staging ([[updInput]], one file per batch) makes
     * the merge observable: batch 1 must REPLACE batch-0 rows for users
     * spanning the parity split, and a `require` pins ≥2 data batches so
     * the row can never silently degrade to a single-batch write.
@@ -111,29 +103,20 @@ object StreamingOps {
       |SELECT user_id, MAX(es) AS last_es,
       |  CAST(COUNT(*) AS BIGINT) AS n_events
       |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     import graft.operators.Scans
-    val inDir = updInput(s, d)
-    val s2 = Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
+    val s2 = MicroBatch.session(s, 4)
     val out = Scans.scratch(s, "fbu_state", d)
     Scans.rmRecursive(new java.io.File(out))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     val base = s"$out/state"
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (upsertMergeBatch(out, batch, id)) nBatches.incrementAndGet()
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "upsert stream did not finish in 180 s")
-    finally q.stop()
+    MicroBatch.runToEnd(
+      MicroBatch.replay(s2, updInput(s, d), updSchema).writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          if (upsertMergeBatch(out, batch, id)) nBatches.incrementAndGet()
+          ()
+        },
+      "upsert stream")
     require(nBatches.get >= 2,
       s"only ${nBatches.get} data batch(es) — the merge path was never " +
         "exercised across a batch boundary")
@@ -578,7 +561,7 @@ object StreamingOps {
     * (dev) and on RocksDB + changelog checkpointing (the 100 TB
     * deployment, where join/window state exceeds executor heap) with
     * identical results. StreamingRecoverySpec drives this transform as a
-    * stream under `RocksDBStateStoreProvider`, asserts parity with this
+    * stream under the RocksDB provider, asserts parity with this
     * batch twin, verifies via the query's state-operator custom metrics
     * that RocksDB actually served the state, and re-proves the
     * state-bound eviction property of the interval join under the same
@@ -598,7 +581,7 @@ object StreamingOps {
     * flatMapGroupsWithState (VERDICT r12 #1), run HERE as a real
     * streaming query end-to-end: the fixture events land as TWO parquet
     * files, the file source admits them one per micro-batch
-    * (maxFilesPerTrigger=1 under Trigger.AvailableNow), so a user whose
+    * ([[MicroBatch.replay]] under [[MicroBatch.runToEnd]]), so a user whose
     * events span the file boundary only produces the correct final row
     * if [[FunnelProcessor]]'s ValueState genuinely carried across
     * batches. TWS mandates the RocksDB state-store provider (the
@@ -625,7 +608,7 @@ object StreamingOps {
   /** Memoized two-file input staging for `stream_transform_with_state`:
     * the events projection split on event-time parity into exactly two
     * one-file parquet halves (healthy = both halves still present), so
-    * spanning users exist and maxFilesPerTrigger=1 yields exactly two
+    * spanning users exist and [[MicroBatch.replay]] yields exactly two
     * micro-batches. Same pid-keyed-scratch-under-session-key hazard and
     * self-heal as Scans.fragmentedEvents. */
   private val twsInMemo = graft.operators.Scans.layoutMemo("tws-in")
@@ -666,9 +649,9 @@ object StreamingOps {
     * the same drift class the r4 review flagged for rmRecursive): each
     * piece lands as ONE parquet file, stamped with strictly increasing
     * mtimes 10 s apart in write order, so the file source's
-    * oldest-first admission under maxFilesPerTrigger=1 replays the
+    * oldest-first admission in [[MicroBatch.replay]] replays the
     * pieces as micro-batches in exactly this order. */
-  private def writeStampedPieces(inDir: String, pieces: Seq[DataFrame])
+  private[graft] def writeStampedPieces(inDir: String, pieces: Seq[DataFrame])
       : Unit = {
     var seen = Set.empty[String]
     val t0 = System.currentTimeMillis()
@@ -685,6 +668,12 @@ object StreamingOps {
   }
 
   private val updInMemo = graft.operators.Scans.layoutMemo("upd-in")
+
+  /** Schemas of the [[updInput]] and [[twsInput]] stagings. */
+  private val updSchema = StructType(Seq(StructField("user_id", LongType),
+    StructField("es", LongType)))
+  private val twsSchema = StructType(Seq(StructField("user_id", LongType),
+    StructField("event_type", StringType), StructField("es", LongType)))
 
   private[graft] def updInput(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
@@ -724,7 +713,7 @@ object StreamingOps {
     * mid-stream, read by StreamingSpec as state high-water strictly
     * below total input), one parquet
     * file each, mtime-stamped in time order ([[writeStampedPieces]]) so
-    * `maxFilesPerTrigger=1` replays them as time-ordered micro-batches:
+    * [[MicroBatch.replay]] admits them as time-ordered micro-batches:
     * the watermark then ADVANCES BETWEEN BATCHES and state eviction
     * actually happens mid-stream — a single-file replay would hold both
     * full sides in state for one giant batch and measure nothing. Chunk
@@ -777,12 +766,11 @@ object StreamingOps {
         // batches, so the batch that ingests sentinel 1 still
         // evicts/emits with the pre-sentinel watermark (hi − delay —
         // the tail ~10 min of real rows stay buffered), and relying on
-        // the trailing NO-DATA micro-batch to flush them races
-        // processAllAvailable/stop (measured: exactly the last click's
-        // outer row went missing). Sentinel batch 2 runs with the
-        // sentinel-1 watermark (hi + 2 d − delay > every real row), so
-        // the whole real tail flushes inside a DATA batch
-        // processAllAvailable provably covers.
+        // the trailing NO-DATA micro-batch to flush them raced the stop
+        // of the earlier default-trigger drain (measured: exactly the
+        // last click's outer row went missing). Sentinel batch 2 runs
+        // with the sentinel-1 watermark (hi + 2 d − delay > every real
+        // row), so the whole real tail flushes inside a DATA batch.
         def sentinel(k: Long) = {
           import s.implicits._
           val far = new java.sql.Timestamp(
@@ -817,15 +805,9 @@ object StreamingOps {
     * independent, part of the registry contract). */
   private[graft] def fileStreamJoin(s: org.apache.spark.sql.SparkSession,
       d: String, joinType: String): DataFrame = {
-    import graft.operators.Scans
     val inDir = sjInput(s, d)
-    val s2 = Scans.fewPartitionSession(s, 4)
-    // the sentinel only advances the watermark if a batch RUNS after it
-    // is ingested; the trailing no-data micro-batch is that batch
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val schema = s2.read.parquet(inDir).schema
-    val raw = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val s2 = MicroBatch.session(s, 4)
+    val raw = MicroBatch.replay(s2, inDir, s2.read.parquet(inDir).schema)
     val clicks = raw.filter(col("event_type") === "click")
       .select(col("event_id").as("c_id"), col("user_id").as("c_uid"),
         col("ts").as("c_ts"))
@@ -843,11 +825,9 @@ object StreamingOps {
         coalesce(col("c_uid"), col("v_uid")).as("user_id"),
         unix_micros(col("c_ts")).as("click_us"),
         unix_micros(col("v_ts")).as("view_us"))
-    val name = "graft_sj_" + joinType + "_" + java.nio.file.Paths.get(d)
-      .toAbsolutePath.normalize.toString.replaceAll("[^A-Za-z0-9]", "_")
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    val name = MicroBatch.sinkName(s"graft_sj_${joinType}_", d)
+    MicroBatch.runToEnd(joined.writeStream.format("memory").queryName(name)
+      .outputMode("append"), s"stream-stream $joinType join")
     // The sentinel filter runs on the BATCH read of the memory table,
     // never inside the streaming plan: a post-join `click_id >= 0` is a
     // LEFT-side predicate, and PushPredicateThroughJoin pushes those
@@ -936,26 +916,15 @@ object StreamingOps {
     * micro-batch, update-mode groupBy-count, per-batch ledger out. */
   private[graft] def updateModeLedger(s: org.apache.spark.sql.SparkSession,
       inDir: String, base: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    val chk = s"$base/chk"; val outDir = s"$base/out"
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .groupBy(col("user_id")).count()
-      .writeStream
-      .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "update-mode query did not finish in 180 s")
-    finally q.stop()
+    val outDir = s"$base/out"
+    val s2 = MicroBatch.session(s, 4)
+    MicroBatch.runToEnd(
+      MicroBatch.replay(s2, inDir, updSchema)
+        .groupBy(col("user_id")).count()
+        .writeStream.option("checkpointLocation", s"$base/chk")
+        .foreachBatch(MicroBatch.ledger(outDir))
+        .outputMode("update"),
+      "update-mode query")
     s.read.parquet(outDir)
       .select(col("batch_id"), col("user_id"), col("count").as("cnt"))
       .orderBy(col("batch_id"), col("user_id"))
@@ -978,62 +947,36 @@ object StreamingOps {
       |FROM e JOIN fp ON e.user_id = fp.user_id
       |GROUP BY e.user_id
       |ORDER BY e.user_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val base = graft.operators.Scans.scratch(s, "tws", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
-    val chk = s"$base/chk"; val outDir = s"$base/out"
-    val inDir = twsInput(s, d)
+    val outDir = s"$base/out"
     // 4-partition clone: RocksDB provider + changelog scoped HERE (TWS
     // mandates RocksDB; a clone can't leak the conf into sibling queries)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
+    val s2 = MicroBatch.session(s, 4, rocksdb = true)
     import s2.implicits._
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new FunnelProcessor, TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders
-          .product[(Long, Long, Long, Long, Long, Long, Long)])
-      .toDF("user_id", "n_events", "n_clicks", "n_purchases",
-        "clicks_before_first_purchase", "first_es", "last_es")
-      .writeStream
-      .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow()).start()
-    // stop() in finally (round-13 self-review, same shape as
-    // Scans.statefulCheckpoint): on the timeout path the query must not
-    // stay live holding RocksDB stores while a later invocation
-    // rmRecursive's its checkpoint out from under it. No-op if the query
-    // already terminated.
-    try require(q.awaitTermination(180000),
-      "transformWithState query did not finish in 180 s")
-    finally q.stop()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).drop("rk", "batch_id")
-      .orderBy(col("user_id"))
+    MicroBatch.runToEnd(
+      MicroBatch.replay(s2, twsInput(s, d), twsSchema)
+        .as[(Long, String, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new FunnelProcessor, TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders
+            .product[(Long, Long, Long, Long, Long, Long, Long)])
+        .toDF("user_id", "n_events", "n_clicks", "n_purchases",
+          "clicks_before_first_purchase", "first_es", "last_es")
+        .writeStream.option("checkpointLocation", s"$base/chk")
+        .foreachBatch(MicroBatch.ledger(outDir))
+        .outputMode(OutputMode.Update()),
+      "transformWithState query")
+    MicroBatch.lastEmission(s, outDir, "user_id").orderBy(col("user_id"))
   }
 
   /** Memoized three-file staging for `stream_tws_timers`: the events
     * (user_id, ts) projection split CHRONOLOGICALLY at the midpoint of
     * the fixture's time range into two one-file halves, followed by one
     * single-row sentinel file (user −1 at max+2 h). With
-    * `maxFilesPerTrigger=1` and oldest-mtime-first file admission —
+    * one file per micro-batch and oldest-mtime-first admission —
     * pinned here by stamping strictly increasing mtimes, 10 s apart, on
     * the files in write order — the watermark climbs monotonically: no
     * real row is ever behind it (half 2 starts at the cut, above half 1's
@@ -1108,12 +1051,10 @@ object StreamingOps {
       |  MAX(es) + 1800000000 AS session_end_us, COUNT(*) AS n_events
       |FROM y GROUP BY user_id, sid
       |ORDER BY user_id, session_start_us""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val base = graft.operators.Scans.scratch(s, "tws_timer", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
-    val chk = s"$base/chk"; val outDir = s"$base/out"
-    val inDir = twsTimerInput(s, d)
+    val outDir = s"$base/out"
     // Cost shape: FOUR micro-batch cycles (three data + the no-data
     // timer batch) at the measured ~0.5–0.6 s/cycle RocksDB-lifecycle
     // floor (BASELINE.md) ⇒ ~2.5 s steady — already trimmed from five
@@ -1121,37 +1062,26 @@ object StreamingOps {
     // input staging pre-paid in bench's materialize_layout. A 2-partition
     // clone measured no faster than the family's 4 (the cycle cost is
     // batch lifecycle, not per-partition stores), so 4 is kept.
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
     // the sentinel advances the watermark; the timers FIRE in the
-    // trailing no-data batch — pin the conf that guarantees it runs
-    // (default true; pinned so a cluster-level override cannot silently
-    // empty this query's output)
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    // trailing no-data batch, which the runner's session pins on
+    val s2 = MicroBatch.session(s, 4, rocksdb = true)
     import s2.implicits._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("ts", TimestampType)))
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .withWatermark("ts", "1 minute")
-      .select(col("user_id"), unix_micros(col("ts")).as("es"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new SessionTimerProcessor(1800000000L),
-        TimeMode.EventTime(), OutputMode.Append(),
-        org.apache.spark.sql.Encoders.product[(Long, Long, Long, Long)])
-      .toDF("user_id", "session_start_us", "session_end_us", "n_events")
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", chk)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "stream_tws_timers query did not finish in 180 s")
-    finally q.stop()
+    MicroBatch.runToEnd(
+      MicroBatch.replay(s2, twsTimerInput(s, d), schema)
+        .withWatermark("ts", "1 minute")
+        .select(col("user_id"), unix_micros(col("ts")).as("es"))
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new SessionTimerProcessor(1800000000L),
+          TimeMode.EventTime(), OutputMode.Append(),
+          org.apache.spark.sql.Encoders.product[(Long, Long, Long, Long)])
+        .toDF("user_id", "session_start_us", "session_end_us", "n_events")
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", s"$base/chk")
+        .outputMode(OutputMode.Append()),
+      "stream_tws_timers query")
     s.read.parquet(outDir).filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("session_start_us"))
   }
@@ -1170,46 +1100,25 @@ object StreamingOps {
     """SELECT user_id, event_type, COUNT(*) AS n_events
       |FROM events GROUP BY 1, 2
       |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val base = graft.operators.Scans.scratch(s, "tws_map", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent
-    val chk = s"$base/chk"; val outDir = s"$base/out"
-    val inDir = twsInput(s, d)
-    val s2 = graft.operators.Scans.fewPartitionSession(s, 4)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    s2.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
+    val outDir = s"$base/out"
+    val s2 = MicroBatch.session(s, 4, rocksdb = true)
     import s2.implicits._
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("es", LongType)))
-    val q = s2.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new TypeCountsProcessor, TimeMode.None(),
-        OutputMode.Update(),
-        org.apache.spark.sql.Encoders.product[(Long, String, Long)])
-      .toDF("user_id", "event_type", "n_events")
-      .writeStream
-      .option("checkpointLocation", chk)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(180000),
-      "stream_tws_mapstate query did not finish in 180 s")
-    finally q.stop()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("batch_id").desc)
-    s.read.parquet(outDir)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).drop("rk", "batch_id")
+    MicroBatch.runToEnd(
+      MicroBatch.replay(s2, twsInput(s, d), twsSchema)
+        .as[(Long, String, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new TypeCountsProcessor, TimeMode.None(),
+          OutputMode.Update(),
+          org.apache.spark.sql.Encoders.product[(Long, String, Long)])
+        .toDF("user_id", "event_type", "n_events")
+        .writeStream.option("checkpointLocation", s"$base/chk")
+        .foreachBatch(MicroBatch.ledger(outDir))
+        .outputMode(OutputMode.Update()),
+      "stream_tws_mapstate query")
+    MicroBatch.lastEmission(s, outDir, "user_id", "event_type")
       .orderBy(col("user_id"), col("event_type"))
   }
 
@@ -1222,7 +1131,7 @@ object StreamingOps {
       .orderBy(col("event_id"))
   }
 
-  /** Incremental batch processing with restart — Trigger.AvailableNow +
+  /** Incremental batch processing with restart — an AvailableNow run +
     * a checkpoint + the exactly-once parquet file sink: the production
     * shape of every periodic ingest job (run on a schedule, process ONLY
     * files that arrived since the last run, stop). Two separate query
@@ -1243,21 +1152,18 @@ object StreamingOps {
     """SELECT event_id, user_id, value FROM events
       |WHERE event_type = 'purchase'
       |ORDER BY event_id""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.streaming.Trigger
     val base = graft.operators.Scans.scratch(s, "increstart", d)
     graft.operators.Scans.rmRecursive(new java.io.File(base)) // idempotent re-run
     val inDir = s"$base/in"; val chk = s"$base/chk"; val outDir = s"$base/out"
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(ev.schema).parquet(inDir)
+    def runOnce(): Unit =
+      MicroBatch.runToEnd(s.readStream.schema(ev.schema).parquet(inDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .option("path", outDir).option("checkpointLocation", chk),
+        "incremental restart run"): Unit
     ev.filter(pmod(col("event_id"), lit(2)) === 0)
       .write.mode("append").parquet(inDir)
     runOnce()

@@ -563,6 +563,69 @@ class EdgeCasesSpec extends AnyFunSuite {
     }
   }
 
+  /** (k BIGINT, ts TIMESTAMP) pieces staged one file per micro-batch in
+    * admission order, under a fresh temp dir that `body` receives. */
+  private def withStagedPieces[A](pieces: Seq[Seq[(Long, Long)]])(
+      body: String => A): A = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_mb_").toString
+    try {
+      StreamingOps.writeStampedPieces(dir, pieces.map(_.toDF("k", "us")
+        .select(col("k"), timestamp_micros(col("us")).as("ts"))))
+      body(dir)
+    } finally graft.operators.Scans.rmRecursive(new java.io.File(dir))
+  }
+
+  private val kTs = org.apache.spark.sql.types.StructType.fromDDL(
+    "k BIGINT, ts TIMESTAMP")
+
+  test("MicroBatch.runToEnd: a failing batch fails the call, naming the " +
+      "row, and leaves no active query") {
+    import graft.streaming.MicroBatch
+    withStagedPieces(Seq(Seq(1L -> 0L))) { dir =>
+      val s2 = MicroBatch.session(spark, 1)
+      val e = intercept[Exception] {
+        MicroBatch.runToEnd(MicroBatch.replay(s2, dir, kTs).writeStream
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            throw new IllegalStateException("planted batch failure")
+          }, "runner-contract row")
+      }
+      assert(e.getMessage.contains("runner-contract row"),
+        s"the failure does not name the row: ${e.getMessage}")
+      assert(s2.streams.active.isEmpty,
+        "a failed row left its streaming query active")
+    }
+  }
+
+  test("MicroBatch.runToEnd: a watermarked two-file replay runs both data " +
+      "batches, then the trailing no-data batch") {
+    // File 1: two rows in the 10-minute window at t0; file 2: a sentinel
+    // a day later. The window can only close once the sentinel moved the
+    // watermark, and the watermark moves BETWEEN batches — so the window
+    // is emitted in the trailing no-data batch or not at all.
+    import graft.streaming.MicroBatch
+    val t0 = 1700000400000000L // 10-minute aligned, µs
+    val day = 86400L * 1000000
+    withStagedPieces(Seq(Seq(1L -> t0, 2L -> (t0 + 60000000L)),
+        Seq(-1L -> (t0 + day)))) { dir =>
+      val s2 = MicroBatch.session(spark, 1)
+      val name = "graft_mb_contract_" + System.nanoTime()
+      val q = MicroBatch.runToEnd(MicroBatch.replay(s2, dir, kTs)
+        .withWatermark("ts", "1 minute")
+        .groupBy(window(col("ts"), "10 minutes")).count()
+        .writeStream.format("memory").queryName(name).outputMode("append"),
+        "runner-contract replay")
+      val inputs = q.recentProgress.toSeq.map(_.numInputRows)
+      assert(inputs == Seq(2L, 1L, 0L),
+        s"expected 2 data batches + 1 trailing no-data batch: $inputs")
+      val emitted = s2.table(name)
+        .select(unix_micros(col("window.start")), col("count")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(emitted == Seq((t0, 2L)),
+        s"the t0 window was not emitted by the no-data batch: $emitted")
+    }
+  }
+
   test("mid-session fixture regeneration fails loudly at the next load") {
     // ADVICE r10 #1: the memoized relations and the streaming schema pin
     // rest on the driver contract "fixtures are immutable for a session's

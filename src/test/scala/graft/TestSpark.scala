@@ -24,11 +24,11 @@ object TestSpark {
     s
   }
 
-  val RocksProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  val ChangelogKey =
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+  /** The RocksDB mode the registered rows run
+    * ([[graft.streaming.MicroBatch.session]] with `rocksdb = true`). */
+  val RocksProviderKey = graft.streaming.MicroBatch.RocksProviderKey
+  val RocksProvider = graft.streaming.MicroBatch.RocksProvider
+  val ChangelogKey = graft.streaming.MicroBatch.ChangelogKey
 
   /** Run `body` with the RocksDB state store provider active — WITH
     * changelog checkpointing (per-batch change uploads instead of full
